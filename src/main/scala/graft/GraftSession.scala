@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place the engine's required session config lives — every
-  * entry point (Verify, Bench, Smoke, PlanAudit, tests) builds through
+  * entry point (Verify, Bench, Smoke, Diag, tests) builds through
   * here so a new required setting cannot silently miss one of them.
   */
 object GraftSession {

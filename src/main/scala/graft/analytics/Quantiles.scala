@@ -144,19 +144,6 @@ object Quantiles {
       ppTable(lineitem, ps), bins)
   }
 
-  /** The pre-r13 serve shape, kept ONLY as the [[graft.ProbeAb]] A/B
-    * counterpart behind the SCALING.md number: without the checkpoint,
-    * `ranges` is re-derived inside both broadcasts — a third full-data
-    * pass the "two-pass" claim didn't account for.
-    */
-  private[graft] def histogramQuantileServeNoCkpt(lineitem: DataFrame,
-      bins: Int = 256, ps: Seq[(Int, Int)] = defaultPs): DataFrame = {
-    val cents = centsOf(lineitem)
-    val ranges = rangesOf(cents)
-    assembleSketch(ranges, cumOf(cents, ranges, bins),
-      ppTable(lineitem, ps), bins)
-  }
-
   /** Full gate report: sketch estimate + the exact continuous
     * percentile (histogram-guided cent-grid order statistics, half-up
     * integral interpolation into micro-price `exact_u`) + an

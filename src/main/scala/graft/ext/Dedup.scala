@@ -706,9 +706,10 @@ object Dedup {
     * [[starContractionGroups]], generalizing [[applyDedupLocal]]'s
     * union-find. At fixture scale the iterative engines cost pure
     * sequential driver rounds (per-superstep plan→RDD, convergence
-    * counts, broadcast-submission jobs — ~80 ms each, DiagJobs); an
-    * edge list PROVABLY under the gate — the bounded collect itself is
-    * the proof (`limit(gate+1)`) — is cheaper to union-find locally.
+    * counts, broadcast-submission jobs — ~80 ms each, `graft.Diag` job
+    * walls); an edge list PROVABLY under the gate — the bounded collect
+    * itself is the proof (`limit(gate+1)`) — is cheaper to union-find
+    * locally.
     * Returns None when the graph exceeds the gate, else the exact
     * (doc_id, group_id = component-min) labeling of every endpoint of
     * the pair graph — the iterative engines' documented output
@@ -717,8 +718,11 @@ object Dedup {
   private[ext] def localComponents(pairs: DataFrame): Option[DataFrame] = {
     val idType = pairs.schema.fields.find(_.name == "a_id").map(_.dataType)
       .getOrElse(org.apache.spark.sql.types.LongType)
+    // a null endpoint is no edge (the distributed engines never join
+    // on it); getLong on it would throw on the driver
     val edges = pairs
-      .select(col("a_id").cast("long"), col("b_id").cast("long"))
+      .select(col("a_id").cast("long").as("a_id"), col("b_id").cast("long").as("b_id"))
+      .filter(col("a_id").isNotNull && col("b_id").isNotNull)
       .limit(LocalCcMaxEdges + 1).collect()
     if (edges.length > LocalCcMaxEdges) None
     else {
@@ -751,6 +755,7 @@ object Dedup {
     */
   private[ext] def duplicateGroupsDistributed(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull) // a null endpoint is no edge
     // Materialize the (small) edge list once — every superstep joins it,
     // and without the checkpoint each iteration would recompute the
     // whole upstream pair-generation pipeline (e.g. LSH banding).

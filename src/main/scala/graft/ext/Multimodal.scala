@@ -404,12 +404,12 @@ object Multimodal {
     * landing-zone shape a real pipeline streams (small media files
     * compacted into container files; per-doc `.bin` arrivals measured
     * 8.6 s of FileStreamSource METADATA bookkeeping alone on the
-    * sf0.1 spool vs a 0.8 s batch scan+decode of the same bytes —
-    * `ProbeAb mediagate_stream_floor` / `mediagate_batch`). Every 97th
-    * doc's payload is truncated by one byte (a deterministically-placed
-    * corrupt arrival, so the gate's quarantine path carries real
-    * traffic and the oracle knows the bad set without parsing
-    * anything). Charged to the warm phase like the clean staging.
+    * sf0.1 spool vs a 0.8 s batch scan+decode of the same bytes).
+    * Every 97th doc's payload is truncated by one byte (a
+    * deterministically-placed corrupt arrival, so the gate's quarantine
+    * path carries real traffic and the oracle knows the bad set without
+    * parsing anything). Charged to the warm phase like the clean
+    * staging.
     */
   /** Collision-free spool/fixture dir name for a fixture path: the
     * sanitized path for readability PLUS an md5 fragment of the RAW

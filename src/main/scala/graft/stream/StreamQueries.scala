@@ -50,10 +50,11 @@ object StreamQueries {
     * stateful micro-batch pays one state-store instance — open, commit,
     * delta file, maintenance — per `spark.sql.shuffle.partitions`,
     * EVERY batch, regardless of data volume; measured on the fixture
-    * (DiagStream2) the stateful `addBatch` is ~0.65 s at 8 state
-    * partitions vs ~1.8 s at 32 for identical input. Batch queries are
-    * protected by AQE coalescing to `advisoryPartitionSizeInBytes`;
-    * this applies the SAME sizing rule at stream start:
+    * (`graft.Diag` per-batch durationMs) the stateful `addBatch` is
+    * ~0.65 s at 8 state partitions vs ~1.8 s at 32 for identical input.
+    * Batch queries are protected by AQE coalescing to
+    * `advisoryPartitionSizeInBytes`; this applies the SAME sizing rule
+    * at stream start:
     * partitions = clamp(inputBytes / advisory, 1, configured).
     * Scale-adaptive, not a local constant: once the input exceeds
     * advisory × configured (any real workload — at 100 TB/day the clamp
@@ -74,7 +75,10 @@ object StreamQueries {
       math.max(1L, (bytes + advisory - 1) / advisory)).toInt
     if (p >= configured) s
     else tunedSessions.getOrElseUpdate((System.identityHashCode(s), p), {
+      // newSession() keeps only the builder/SparkConf confs: carry the
+      // parent's runtime SQL confs over, then override the partitions
       val c = s.newSession()
+      s.conf.getAll.foreach { case (k, v) => if (s.conf.isModifiable(k)) c.conf.set(k, v) }
       c.conf.set("spark.sql.shuffle.partitions", p.toString)
       c
     })
@@ -510,7 +514,7 @@ object StreamQueries {
     // as a `(doc_id, media)` parquet stream (the landing-zone shape:
     // small media compacted into container files; the per-doc `.bin`
     // file-stream variant measured 8.6 s of source-log bookkeeping
-    // alone at sf0.1 vs this path's sub-second — priced in ProbeAb),
+    // alone at sf0.1 vs this path's sub-second),
     // each payload decoded with the REAL P6 parse inside the
     // micro-batch (pure map, no state), malformed arrivals quarantined
     // into a width=−1 bucket instead of failing the stream (the P7

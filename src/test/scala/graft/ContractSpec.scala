@@ -53,6 +53,21 @@ class ContractSpec extends SparkSuite {
     assert(offenders.isEmpty, s"oracle SQL with tab/CR: $offenders")
   }
 
+  test("the only runnable mains are the driver contract's and graft.Diag") {
+    // one-off measurements go through graft.Diag, not a new dev main
+    import scala.jdk.CollectionConverters._
+    val objectDecl = """(?m)^\s*(?:private\s+|final\s+|case\s+)*object\s+(\w+)""".r
+    val entry = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val mains = try files.iterator.asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val src = java.nio.file.Files.readString(f)
+      // the enclosing object: the last one declared before the entry point
+      entry.findAllMatchIn(src).map(m =>
+        objectDecl.findAllMatchIn(src.take(m.start)).toSeq.last.group(1))
+    }.toSet finally files.close()
+    assert(mains == Set("Bench", "Verify", "Smoke", "Warm", "Maintenance", "ScaleUp", "Diag"))
+  }
+
   test("forceAndCount returns count() while forcing every column") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

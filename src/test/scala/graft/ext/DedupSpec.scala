@@ -92,8 +92,8 @@ class DedupSpec extends SparkSuite {
 
   test("localComponents fast path ≡ both distributed CC engines") {
     // long chain (diameter 6), a star, a triangle with a cross edge,
-    // reversed-order edges, and a self-loop — every shape the engines
-    // must agree on
+    // reversed-order edges, a self-loop and a null endpoint — every
+    // shape the engines must agree on
     val pairs = Seq(
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L), (15L, 16L),
       (20L, 25L), (20L, 24L), (20L, 23L),
@@ -101,6 +101,8 @@ class DedupSpec extends SparkSuite {
       (42L, 41L), // reversed order: min is on the b side
       (50L, 50L)  // self-loop labels itself
     ).toDF("a_id", "b_id")
+      // a null endpoint is no edge: dropped, not a driver-side NPE
+      .union(Seq((Some(12L), Option.empty[Long])).toDF("a_id", "b_id"))
     val local = Dedup.localComponents(pairs).get
       .as[(Long, Long)].collect().toMap
     val lp = Dedup.duplicateGroupsDistributed(pairs)
